@@ -251,6 +251,7 @@ def cmd_console(args) -> int:
     stays dependency-free).  Commands: :topk N, :mode sql|wand, :cosine,
     :stats, :quit."""
     from splade_easy_spark.query import Searcher
+    from splade_easy_spark.query.searcher import METHODS
     from splade_easy_spark.index.maintenance import stats
 
     spark = _spark(args)
@@ -270,7 +271,11 @@ def cmd_console(args) -> int:
             top_k = int(line.split()[1])
             continue
         if line.startswith(":mode"):
-            method = line.split()[1]
+            mode = line.split()[1]
+            if mode in METHODS:
+                method = mode
+            else:
+                print(f"unknown mode {mode!r}: {' | '.join(METHODS)}")
             continue
         if line == ":cosine":
             cosine = not cosine
@@ -563,7 +568,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     bs.add_argument("--top-k", type=int, default=10)
     bs.add_argument("--cosine", action="store_true")
-    bs.add_argument("--method", default="wand", choices=["sql", "wand", "wand_nox"])
+    bs.add_argument("--method", default="wand", choices=["sql", "wand"])
     bs.add_argument(
         "--filter",
         help="SQL predicate over stored doc columns (candidate restriction, "

@@ -46,10 +46,18 @@ def quantize_embeddings(
     the vector with SIX interpreted higher-order-function passes (absmax,
     quantize transform, err zip_with evaluated twice after projection
     collapse, array_max, sse fold), measured 2.6s on 200k×64 vectors vs
-    0.9s for this kernel.  Bit-identical by construction: every step is the
-    same IEEE-754 float64 op sequence (widen → mul/div → floor-half-up;
-    ``cumsum`` is the same left-to-right sse fold), pinned by the DuckDB
-    oracle gate."""
+    0.9s for this kernel.  Bit-identical for non-empty vectors: every step
+    is the same IEEE-754 float64 op sequence (widen → mul/div →
+    floor-half-up; the column-wise running sum is the same left-to-right
+    sse fold), pinned by the DuckDB oracle gate.
+
+    Edge rows: a null vector gives all-null derived columns.  An empty
+    vector gives empty codes, NULL scale / max_abs_err and NaN mse — the
+    Catalyst form raised DIVIDE_BY_ZERO there under ANSI mode.  A null
+    ELEMENT gets a null code and is left out of the scale and of
+    max_abs_err (as ``array_max`` skips nulls), and its vector's mse is
+    NULL (a fold over a null error is null); a vector of only null
+    elements has a NULL scale."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -72,13 +80,22 @@ def quantize_embeddings(
                 .to_numpy(zero_copy_only=False)
                 .astype(np.int64)
             )
-            v = pc.list_flatten(col).to_numpy(zero_copy_only=False).astype(np.float64)
+            flat = pc.list_flatten(col)
+            # null elements read as 0: they never raise |v|'s max and are
+            # masked out of codes and errors below
+            elem_ok = pc.is_valid(flat).to_numpy(zero_copy_only=False)
+            v = np.where(
+                elem_ok, flat.to_numpy(zero_copy_only=False).astype(np.float64), 0.0
+            )
             starts = np.zeros(n, dtype=np.int64)
             np.cumsum(lens[:-1], out=starts[1:])
             nonempty = lens > 0
             m = np.zeros(n, dtype=np.float64)
+            n_ok = np.zeros(n, dtype=np.int64)
             if nonempty.any():
                 m[nonempty] = np.maximum.reduceat(np.abs(v), starts[nonempty])
+                n_ok[nonempty] = np.add.reduceat(elem_ok.astype(np.int64), starts[nonempty])
+            has_val = n_ok > 0
             m_row = np.repeat(m, lens)
             with np.errstate(divide="ignore", invalid="ignore"):
                 q = np.floor(v * 127.0 / m_row + 0.5)
@@ -87,10 +104,10 @@ def quantize_embeddings(
             # empty-but-present rows stay empty lists — as in the HOF form
             off = np.concatenate((starts, [len(v)])).astype(np.int32)
             off_pa = pa.array(off, mask=np.concatenate((~valid, [False])))
-            q_arr = pa.ListArray.from_arrays(off_pa, pa.array(q))
-            # array_max(transform(…)) of a null/empty vector is NULL,
-            # so scale is NULL exactly when the row has no elements
-            scale = pa.array(m / 127.0, mask=~nonempty)
+            q_arr = pa.ListArray.from_arrays(off_pa, pa.array(q, mask=~elem_ok))
+            # array_max(transform(…)) of a null/empty/all-null vector is
+            # NULL, so scale is NULL exactly when no element is non-null
+            scale = pa.array(m / 127.0, mask=~has_val)
             cols = [rb.column(0), scale, q_arr]
             names = [rb.schema.names[0], "scale", "q_emb"]
             if with_error:
@@ -121,8 +138,8 @@ def quantize_embeddings(
                 with np.errstate(divide="ignore", invalid="ignore"):
                     mse = sse / lens  # 0.0/0 → NaN, matching double div
                 cols += [
-                    pa.array(mx, mask=~nonempty),
-                    pa.array(mse, mask=~valid),
+                    pa.array(mx, mask=~has_val),
+                    pa.array(mse, mask=~valid | (n_ok < lens)),
                 ]
                 names += ["max_abs_err", "mse"]
             yield pa.RecordBatch.from_arrays(cols, names=names)

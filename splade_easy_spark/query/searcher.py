@@ -61,6 +61,22 @@ def analyze_query(
     return sorted(out.items())
 
 
+#: the query engines every ``method=`` argument selects between
+METHODS = ("sql", "wand")
+
+#: column contract of ``search_many`` results
+_MANY_SCHEMA = (
+    "query_id STRING, rank INT, doc_id STRING, score DOUBLE, conv_id STRING, turn_idx INT"
+)
+
+
+def _check_method(method: str) -> None:
+    """Reject an unknown ``method`` before any work: only ``METHODS``
+    name an engine, and a typo must not silently run a different one."""
+    if method not in METHODS:
+        raise ValueError(f"unknown method {method!r}: expected one of {METHODS}")
+
+
 @dataclass
 class SearchResultSchema:
     """Column contract of search results — the reference's SearchResult
@@ -127,14 +143,14 @@ class Searcher:
                 F.col("doc_int") < self._snapshot_max
             )
             self.docs = self.docs.where(F.col("doc_int") < self._snapshot_max)
+        layout = self.cat.manifest.data.get("layout", {})
         # seed of the postings term_id hash (catalog.term_id_py) — recorded
         # at build; legacy pre-term_id indexes never recorded one, and the
         # WAND path detects their layout from the postings columns
-        self.term_id_seed = int(
-            self.cat.manifest.data.get("layout", {}).get(
-                "term_id_seed", self.config.term_id_seed
-            )
-        )
+        self.term_id_seed = int(layout.get("term_id_seed", self.config.term_id_seed))
+        #: docs per WAND segment as recorded at build (or last reshard)
+        self.segment_docs = int(layout.get("segment_docs", self.config.segment_docs))
+        self._pack_cosine = bool(layout.get("pack_cosine", True))
         self.mode = mode
         #: driver-side {term: global doc-weight upper bound}; "unset" until
         #: the first batch search materializes it (see ``_term_bounds``)
@@ -151,6 +167,16 @@ class Searcher:
 
     def _deleted(self) -> DataFrame | None:
         return self.cat.read_deleted(self.spark)
+
+    def _wand_postings(self, use_cosine: bool) -> DataFrame | None:
+        """The postings scan a WAND call reads, or ``None`` when the call
+        must answer on the SQL path instead: cosine needs the normalized
+        weight stream, which indexes built before it existed (no ``nwts``
+        column) or with ``pack_cosine=False`` do not carry."""
+        postings = self._postings()
+        if use_cosine and ("nwts" not in postings.columns or not self._pack_cosine):
+            return None
+        return postings
 
     def _postings(self) -> DataFrame:
         post = self.cat.read(self.spark, "postings")
@@ -288,6 +314,12 @@ class Searcher:
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
 
+    def _no_hits(self, return_text: bool = False) -> DataFrame:
+        """An empty result with the search columns."""
+        return self._attach_docs(
+            self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), return_text
+        )
+
     # ------------------------------------------------------------------
     def search(
         self,
@@ -322,29 +354,15 @@ class Searcher:
         is the path for SELECTIVE filters, where the mask is tiny and the
         kernel's pruning does proportionally less work.
         """
+        _check_method(method)
         terms = analyze_query(query, self.config) if isinstance(query, str) else query
         if not terms:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), return_text
-            )
+            return self._no_hits(return_text)
         deleted = self._deleted()
-        if method == "wand":
+        postings = self._wand_postings(use_cosine) if method == "wand" else None
+        if postings is not None:
             from splade_easy_spark.query.wand import wand_search_scores
 
-            postings = self._postings()
-            if use_cosine and (
-                "nwts" not in postings.columns
-                or not self.cat.manifest.data.get("layout", {}).get("pack_cosine", True)
-            ):
-                # index without a normalized weight stream (pre-nwts build,
-                # or pack_cosine=False) — cosine answers via the SQL path
-                method = "sql"
-        if method == "wand":
-            seg_docs = int(
-                self.cat.manifest.data.get("layout", {}).get(
-                    "segment_docs", self.config.segment_docs
-                )
-            )
             scan_terms = terms
             if isinstance(self._tb_cache, dict):
                 # vocabulary map already paid for by a batch call: the
@@ -356,10 +374,7 @@ class Searcher:
                 # queries: one short IN-list isn't worth a vocab collect.
                 scan_terms = [(t, w) for t, w in terms if t in self._tb_cache]
             if not scan_terms:
-                return self._attach_docs(
-                    self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"),
-                    return_text,
-                )
+                return self._no_hits(return_text)
             # tombstones stay distributed: packed rows ride the postings'
             # seg exchange into the kernel (never a driver collect), which
             # masks them BEFORE the pruning threshold is computed
@@ -369,7 +384,7 @@ class Searcher:
                 else self.docs.where(doc_filter).select("doc_int")
             )
             scores = wand_search_scores(
-                self.spark, postings, scan_terms, seg_docs, top_k, deleted, use_cosine,
+                self.spark, postings, scan_terms, self.segment_docs, top_k, deleted, use_cosine,
                 term_id_seed=self.term_id_seed, snapshot_max=self._snapshot_max,
                 allowed=allowed,
             )
@@ -408,8 +423,12 @@ class Searcher:
         doc_filter: Column | None = None,
     ) -> DataFrame:
         """Batch evaluation of many queries in ONE Spark job (the bulk
-        path the reference lacks entirely): explode all query terms, join
-        postings once, window top-k per query_id.
+        path the reference lacks entirely), then a top-k window per
+        query_id.  ``method='sql'`` explodes all query terms and joins
+        postings once; ``method='wand'`` runs the decode-once batch kernel
+        over the seg-colocated packed postings
+        (``wand.wand_search_many_scores``) — exact, rank-identical to the
+        SQL path.  Any other ``method`` raises ``ValueError``.
 
         ``queries``: [{"query_id": ..., "text": ...}, ...]
         Returns (query_id, rank, doc_id, score, conv_id, turn_idx).
@@ -430,44 +449,27 @@ class Searcher:
         in the true top-k may contain one, and with its postings never
         shipped the kernel's repair pass has nothing to repair with — so
         exactness-preserving cuts live in the kernel (MaxScore + repair)
-        and this knob defaults off.  Pruning applies to the wand/wand_nox
-        methods only; ``method='sql'`` stays the untouched oracle path.
+        and this knob defaults off.  Pruning applies to ``method='wand'``
+        only; ``method='sql'`` stays the untouched oracle path.
 
         ``doc_filter`` as in :func:`search` — candidate restriction with
         full-corpus statistics.  SQL path: one semi-join for the whole
         batch.  WAND path: ONE packed inclusion mask shipped to the batch
-        kernel and applied before every query's pruning threshold.  The
-        exchange-free ``wand_nox`` variant falls back to SQL (its
-        post-kernel groupBy-sum has no mask seam).
+        kernel and applied before every query's pruning threshold.
         """
-        if doc_filter is not None and method == "wand_nox":
-            method = "sql"
-        rows = []
-        for q in queries:
-            for term, qw in analyze_query(q["text"], self.config):
-                rows.append((q["query_id"], term, qw))
+        _check_method(method)
+        analyzed = [(q["query_id"], analyze_query(q["text"], self.config)) for q in queries]
+        rows = [(qid, term, qw) for qid, ts in analyzed for term, qw in ts]
         if not rows:
-            return self.spark.createDataFrame(
-                [], "query_id STRING, rank INT, doc_id STRING, score DOUBLE, conv_id STRING, turn_idx INT"
-            )
-        deleted0 = self._deleted()
-        if method in ("wand", "wand_nox"):
-            from splade_easy_spark.query.wand import (
-                wand_search_many_scores,
-                wand_search_many_scores_nox,
-            )
+            return self.spark.createDataFrame([], _MANY_SCHEMA)
+        deleted = self._deleted()
+        postings = self._wand_postings(use_cosine) if method == "wand" else None
+        if postings is None:
+            scores = self._sql_many_scores(rows, top_k, use_cosine, deleted, doc_filter)
+        else:
+            from splade_easy_spark.query.wand import wand_search_many_scores
 
-            postings = self._postings()
-            if use_cosine and (
-                "nwts" not in postings.columns
-                or not self.cat.manifest.data.get("layout", {}).get("pack_cosine", True)
-            ):
-                method = "sql"  # no normalized stream: cosine via SQL path
-        if method in ("wand", "wand_nox"):
-            qt = {
-                q["query_id"]: analyze_query(q["text"], self.config) for q in queries
-            }
-            qt = {k: v for k, v in qt.items() if v}
+            qt = {qid: ts for qid, ts in dict(analyzed).items() if ts}
             # cosine query norms are over the FULL analyzed term list —
             # the SQL path's norm includes OOV terms (they contribute to
             # ‖q‖ though never to the dot), so pruning must not touch it
@@ -501,39 +503,16 @@ class Searcher:
                         pruned_qt[qid] = kept
                 qt = pruned_qt
             if not qt:
-                return self.spark.createDataFrame(
-                    [],
-                    "query_id STRING, rank INT, doc_id STRING, score DOUBLE, conv_id STRING, turn_idx INT",
-                )
-            seg_docs = int(
-                self.cat.manifest.data.get("layout", {}).get(
-                    "segment_docs", self.config.segment_docs
-                )
+                return self.spark.createDataFrame([], _MANY_SCHEMA)
+            allowed = (
+                None
+                if doc_filter is None
+                else self.docs.where(doc_filter).select("doc_int")
             )
-            # 'wand_nox' = the exchange-free variant: no repartition(seg),
-            # partial (query, doc) sums merged by groupBy — see
-            # wand.wand_search_many_scores_nox for the measured trade-off
-            batch_fn = (
-                wand_search_many_scores_nox
-                if method == "wand_nox"
-                else wand_search_many_scores
-            )
-            batch_kwargs = dict(
-                term_id_seed=self.term_id_seed, snapshot_max=self._snapshot_max
-            )
-            if doc_filter is not None:
-                batch_kwargs["allowed"] = self.docs.where(doc_filter).select(
-                    "doc_int"
-                )
-            cand = batch_fn(
-                self.spark,
-                postings,
-                qt,
-                seg_docs,
-                top_k,
-                deleted0,
-                use_cosine,
-                **batch_kwargs,
+            scores = wand_search_many_scores(
+                self.spark, postings, qt, self.segment_docs, top_k, deleted, use_cosine,
+                term_id_seed=self.term_id_seed, snapshot_max=self._snapshot_max,
+                allowed=allowed,
             )
             if use_cosine:
                 qnorms = [
@@ -541,27 +520,34 @@ class Searcher:
                     for qid, ts in qt_full.items()
                 ]
                 qn = self.spark.createDataFrame(qnorms, "query_id STRING, _qn DOUBLE")
-                cand = (
-                    cand.join(F.broadcast(qn), "query_id")
+                scores = (
+                    scores.join(F.broadcast(qn), "query_id")
                     .where(F.col("_qn") > 0)
                     .select(
                         "query_id", "doc_int", (F.col("score") / F.col("_qn")).alias("score")
                     )
                 )
-            from pyspark.sql import Window
+        from pyspark.sql import Window
 
-            w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_int"))
-            topk = cand.withColumn("rank", F.row_number().over(w)).where(
-                F.col("rank") <= top_k
-            )
-            return (
-                topk.join(
-                    self.docs.select("doc_int", "doc_id", "conv_id", "turn_idx"), "doc_int"
-                )
-                .select("query_id", "rank", "doc_id", "score", "conv_id", "turn_idx")
-                .orderBy("query_id", "rank")
-            )
+        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_int"))
+        topk = scores.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= top_k)
+        return (
+            topk.join(self.docs.select("doc_int", "doc_id", "conv_id", "turn_idx"), "doc_int")
+            .select("query_id", "rank", "doc_id", "score", "conv_id", "turn_idx")
+            .orderBy("query_id", "rank")
+        )
 
+    def _sql_many_scores(
+        self,
+        rows: list[tuple[str, str, float]],
+        top_k: int,
+        use_cosine: bool,
+        deleted: DataFrame | None,
+        doc_filter: Column | None,
+    ) -> DataFrame:
+        """(query_id, doc_int, score) of the SQL batch path: the
+        exploded (query_id, term, qweight) rows joined to doc_terms once,
+        masked, and cut to a partial per-partition top-k."""
         qdf = self.spark.createDataFrame(rows, "query_id STRING, term STRING, qweight DOUBLE")
         dt = self._pruned_doc_terms(sorted({r[1] for r in rows}))
         joined = dt.join(F.broadcast(qdf), "term")
@@ -589,9 +575,9 @@ class Searcher:
                 F.sum(F.col("weight") * F.col("qweight")).alias("score")
             )
         scores = scores.where(F.col("score") > 0)
-        if deleted0 is not None:
+        if deleted is not None:
             scores = scores.join(
-                F.broadcast(deleted0.select("doc_int")), "doc_int", "left_anti"
+                F.broadcast(deleted.select("doc_int")), "doc_int", "left_anti"
             )
         if doc_filter is not None:
             # BEFORE the partial top-k: heads taken over ineligible docs
@@ -607,10 +593,7 @@ class Searcher:
         import pandas as pd
 
         def partial_topk(batches):
-            parts = []
-            for pdf in batches:
-                if len(pdf):
-                    parts.append(pdf)
+            parts = [pdf for pdf in batches if len(pdf)]
             if not parts:
                 return
             allp = pd.concat(parts, ignore_index=True)
@@ -619,17 +602,8 @@ class Searcher:
             )
             yield allp.groupby("query_id", sort=False).head(top_k)
 
-        scores = scores.mapInPandas(
+        return scores.mapInPandas(
             partial_topk, schema="query_id STRING, doc_int LONG, score DOUBLE"
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_int"))
-        topk = scores.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= top_k)
-        return (
-            topk.join(self.docs.select("doc_int", "doc_id", "conv_id", "turn_idx"), "doc_int")
-            .select("query_id", "rank", "doc_id", "score", "conv_id", "turn_idx")
-            .orderBy("query_id", "rank")
         )
 
     # ------------------------------------------------------------------
@@ -657,9 +631,7 @@ class Searcher:
             )
         ordered = _phrase_tokens(phrase, self.config)
         if not ordered:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         distinct = sorted(set(ordered))
         dt = self._pruned_doc_terms(distinct)
         cand = (
@@ -717,9 +689,7 @@ class Searcher:
         n = sorted({t for t, _ in analyze_query(" ".join(must_not or []), cfg)})
         scored_terms = m + s_extra
         if not scored_terms:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         all_terms = sorted(set(scored_terms) | set(n))
         dt = self._pruned_doc_terms(all_terms)
         scored = (
@@ -771,13 +741,12 @@ class Searcher:
         scan (the banded scan is the distributed analog of Lucene's FST
         automaton walk; postings are untouched until the expansion is
         fixed)."""
+        _check_method(method)
         # same casing as the index dictionary — unconditional lower()
         # against a case-preserving analyzer would inflate every distance
         terms = self._fuzzy_expansions(query_term, max_dist, max_expansions)
         if not terms:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         return self.search(
             terms, top_k=top_k, use_cosine=use_cosine, method=method,
             doc_filter=doc_filter,
@@ -855,9 +824,7 @@ class Searcher:
             cond = F.col(name) == rhs
             flt = cond if flt is None else (flt & cond)
         if not weights:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         dt = self._pruned_doc_terms(sorted(set(weights) | set(must_not)))
         qdf = self.spark.createDataFrame(
             sorted(weights.items()), "term STRING, qweight DOUBLE"
@@ -937,11 +904,10 @@ class Searcher:
         with BOTH query paths (WAND pruning included) and with
         ``doc_filter``.  The expansion is one tiny bounded job against the
         prefix-pruned term_stats scan."""
+        _check_method(method)
         exp = [r["term"] for r in self.suggest_terms(prefix, max_expansions).collect()]
         if not exp:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         return self.search(
             [(t, 1.0) for t in exp], top_k=top_k, use_cosine=use_cosine,
             method=method, doc_filter=doc_filter,
@@ -1033,6 +999,7 @@ class Searcher:
         no pushdown, so the expansion scans term_stats — |dictionary| ≪
         |corpus| and the scan is embarrassingly parallel, the same trade
         Lucene makes when a pattern's automaton has no literal prefix."""
+        _check_method(method)
         exp = [
             r["term"]
             for r in self.cat.read(self.spark, "term_stats")
@@ -1043,9 +1010,7 @@ class Searcher:
             .collect()
         ]
         if not exp:
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         return self.search(
             [(t, 1.0) for t in exp], top_k=top_k, use_cosine=use_cosine,
             method=method, doc_filter=doc_filter,
@@ -1110,6 +1075,7 @@ class Searcher:
         from splade_easy_spark.functions.bm25 import bm25_weight_expr
         from splade_easy_spark.functions.text import tokenize
 
+        _check_method(method)
         if "text" not in self.docs.columns:
             raise ValueError(
                 "more_like_this needs stored text; this index has none "
@@ -1150,9 +1116,7 @@ class Searcher:
             # disambiguate on the rare path only
             if src.count() == 0:
                 raise KeyError(f"doc_id not in index: {doc_id!r}")
-            return self._attach_docs(
-                self.spark.createDataFrame([], "doc_int LONG, score DOUBLE"), False
-            )
+            return self._no_hits()
         # overfetch by one: the source doc itself is typically the top hit
         out = self.search(
             terms, top_k=top_k + 1, use_cosine=use_cosine, method=method,
@@ -1181,6 +1145,7 @@ class Searcher:
         window math runs post-limit on the k result rows (the text join
         the search already does), never a corpus pass — same semantics as
         ``adhoc.search_snippets``."""
+        _check_method(method)
         if "text" not in self.docs.columns:
             raise ValueError(
                 "search_snippets needs stored text; this index has none "

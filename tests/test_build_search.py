@@ -392,6 +392,28 @@ def test_more_like_this_unknown_doc_raises(corpus, spark):
         s.more_like_this("no#such", top_k=3)
 
 
+def test_unknown_method_rejected(corpus, spark):
+    """Only 'sql' and 'wand' select an engine: any other method — a typo,
+    or the name of a removed engine — raises before any Spark job
+    instead of silently running the SQL path, on every verb taking one."""
+    idx_dir, oracle, _ = corpus
+    s = Searcher(spark, idx_dir, CFG)
+    some_doc = next(iter(oracle.tf))
+    calls = [
+        lambda m: s.search("baba0 ceba1", method=m),
+        lambda m: s.search_many([{"query_id": "q", "text": "baba0"}], method=m),
+        lambda m: s.prefix_search("ba", method=m),
+        lambda m: s.regex_search("ba.a0", method=m),
+        lambda m: s.fuzzy_search("baba0", method=m),
+        lambda m: s.more_like_this(some_doc, method=m),
+        lambda m: s.search_snippets("baba0", method=m),
+    ]
+    for bad in ("WAND", "wandx", ""):
+        for call in calls:
+            with pytest.raises(ValueError, match="unknown method"):
+                call(bad)
+
+
 def test_phrase_search_index_matches_bruteforce(corpus, spark):
     """Index-backed phrase search = brute force: docs whose token stream
     contains the contiguous sequence, ranked by BM25 sum over the phrase's

@@ -62,9 +62,11 @@ def test_near_dup_pairs_matches_hof_join(spark):
 
 def test_quantize_null_and_empty_rows(spark):
     """Null vector → all-null derived columns; empty vector → empty codes,
-    NULL scale/max_abs_err, NaN mse — the HOF formulation's semantics."""
+    NULL scale/max_abs_err, NaN mse (the Catalyst form raised under ANSI);
+    a null element → null code, left out of scale and max_abs_err, NULL
+    mse; all-null elements → NULL scale."""
     df = spark.createDataFrame(
-        [(1, [0.5, -1.0]), (2, None), (3, [])],
+        [(1, [0.5, -1.0]), (2, None), (3, []), (4, [0.5, None, -1.0]), (5, [None])],
         "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
     got = {r["vec_id"]: r for r in quantize_embeddings(df).collect()}
@@ -73,6 +75,11 @@ def test_quantize_null_and_empty_rows(spark):
     assert got[2]["max_abs_err"] is None and got[2]["mse"] is None
     assert got[3]["q_emb"] == [] and got[3]["scale"] is None
     assert got[3]["max_abs_err"] is None and math.isnan(got[3]["mse"])
+    assert got[4]["q_emb"] == [64, None, -127]
+    assert got[4]["scale"] == got[1]["scale"]
+    assert got[4]["max_abs_err"] == got[1]["max_abs_err"] and got[4]["mse"] is None
+    assert got[5]["q_emb"] == [None] and got[5]["scale"] is None
+    assert got[5]["max_abs_err"] is None and got[5]["mse"] is None
 
 
 def test_term_tf_rows_doc_contiguous(spark):

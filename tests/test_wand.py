@@ -213,21 +213,32 @@ def test_wand_profile_blocks_skipped(corpus, spark):
     assert total > 0 and 0 < decoded <= total
 
 
+def _batch_hits(s, queries, **kw) -> dict[str, list[tuple[str, float]]]:
+    """search_many rows as {query_id: [(doc_id, score), ...]} in rank order."""
+    got: dict[str, list[tuple[str, float]]] = {}
+    for r in s.search_many(queries, **kw).collect():
+        got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+    return got
+
+
+def _assert_same_hits(sql, wand):
+    """Same query ids, same docs in the same order per query, and scores
+    equal up to the float32 packed-weight error."""
+    assert set(sql) == set(wand)
+    for qid in sql:
+        assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]], qid
+        for (_, a), (_, b) in zip(sql[qid], wand[qid]):
+            assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
+
+
 def test_batch_wand_equals_batch_sql(corpus, spark):
     idx_dir, oracle = corpus
     s = Searcher(spark, idx_dir, CFG)
     queries = [{"query_id": f"q{i}", "text": q["text"]} for i, q in enumerate(generate_query_set(12, seed=31))]
-    def collect(method):
-        got = {}
-        for r in s.search_many(queries, top_k=5, method=method).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-    sql, wand = collect("sql"), collect("wand")
-    assert set(sql) == set(wand)
-    for qid in sql:
-        assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]]
-        for (_, a), (_, b) in zip(sql[qid], wand[qid]):
-            assert abs(a - b) <= 1e-5 * max(1.0, abs(a))  # float32 packed weights
+    _assert_same_hits(
+        _batch_hits(s, queries, top_k=5, method="sql"),
+        _batch_hits(s, queries, top_k=5, method="wand"),
+    )
 
 
 def test_batch_wand_prune_repair_exact(corpus, spark):
@@ -248,19 +259,11 @@ def test_batch_wand_prune_repair_exact(corpus, spark):
         for i in range(8)
     ]
 
-    def collect(method, k):
-        got = {}
-        for r in s.search_many(queries, top_k=k, method=method).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
     for k in (3, 10):
-        sql, wand = collect("sql", k), collect("wand", k)
-        assert set(sql) == set(wand)
-        for qid in sql:
-            assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]], qid
-            for (_, a), (_, b) in zip(sql[qid], wand[qid]):
-                assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
+        _assert_same_hits(
+            _batch_hits(s, queries, top_k=k, method="sql"),
+            _batch_hits(s, queries, top_k=k, method="wand"),
+        )
 
 
 def test_batch_segment_unsorted_rows_exact():
@@ -342,19 +345,11 @@ def test_batch_wand_appended_multifile_index(spark, tmp_path):
         for i in range(6)
     ]
 
-    def collect(method, k):
-        got = {}
-        for r in s.search_many(queries, top_k=k, method=method).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
     for k in (3, 10):
-        sql, wand = collect("sql", k), collect("wand", k)
-        assert set(sql) == set(wand)
-        for qid in sql:
-            assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]], qid
-            for (_, a), (_, b) in zip(sql[qid], wand[qid]):
-                assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
+        _assert_same_hits(
+            _batch_hits(s, queries, top_k=k, method="sql"),
+            _batch_hits(s, queries, top_k=k, method="wand"),
+        )
 
 
 def test_batch_profile_skips_block_decodes(corpus, spark):
@@ -428,22 +423,13 @@ def test_cosine_batch_wand_equals_sql(corpus, spark):
         {"query_id": f"cq{i}", "text": q["text"]}
         for i, q in enumerate(generate_query_set(8, seed=77))
     ]
-
-    def collect(method):
-        got = {}
-        for r in s.search_many(queries, top_k=5, use_cosine=True, method=method).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
-    sql, wand = collect("sql"), collect("wand")
-    assert set(sql) == set(wand)
-    for qid in sql:
-        assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]]
-        for (_, a), (_, b) in zip(sql[qid], wand[qid]):
-            assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
+    _assert_same_hits(
+        _batch_hits(s, queries, top_k=5, use_cosine=True, method="sql"),
+        _batch_hits(s, queries, top_k=5, use_cosine=True, method="wand"),
+    )
 
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
@@ -491,8 +477,10 @@ def _truth(seg_docs, terms, qw, dead, wm=None):
 def _check_exact(d_out, s_out, acc, alive, k):
     """Kernel contract: every returned (doc, score) is the exact score of a
     live doc; all k-boundary ties kept; every live doc strictly above the
-    smallest returned score is present."""
+    smallest returned score is present; and at least min(k, live scoring
+    docs) rows come back (an empty or k−1 result is a dropped k-th doc)."""
     assert len(d_out) == len(set(int(x) for x in d_out))
+    assert len(d_out) >= min(k, int(np.count_nonzero(alive & (acc > 0))))
     for doc, score in zip(d_out, s_out):
         assert alive[int(doc)]
         assert abs(score - acc[int(doc)]) < 1e-6 * max(1.0, abs(acc[int(doc)]))
@@ -508,14 +496,43 @@ def _check_exact(d_out, s_out, acc, alive, k):
     assert all(s >= kth - 1e-9 for s in s_out)
 
 
+#: a k-th doc whose partial score equals θ while its per-candidate bound,
+#: lowered one retired term at a time by subtraction, ends a few ulps
+#: below zero — a strict bound test cut the only live winner (doc 0,
+#: 30.00846164) and returned zero rows
+_KTH_DROP_WEIGHTS = [
+    2.836458444595337, 2.6184005737304688, 2.256857395172119, 0.7683194875717163,
+]
+_KTH_DROP_CASE = (
+    8,
+    {
+        "t0": [(0, _KTH_DROP_WEIGHTS[0]), (1, _KTH_DROP_WEIGHTS[0] / 2)],
+        "t1": [(0, _KTH_DROP_WEIGHTS[1])],
+        "t2": [(0, _KTH_DROP_WEIGHTS[2])],
+        "t3": [(0, _KTH_DROP_WEIGHTS[3])],
+    },
+    {
+        "t0": 5.478642167304619,
+        "t1": 2.0324243930712083,
+        "t2": 2.7270948693773076,
+        "t3": 3.8944155813390053,
+    },
+    [],
+    4,
+    1,
+    None,
+)
+
+
 @settings(max_examples=40, deadline=None)
 @given(_segment_case())
+@example(_KTH_DROP_CASE)
 def test_score_segment_exactness_property(case):
     """Property-based: the single-query kernel is exact (scores, tombstone
-    masking, snapshot-watermark masking, tie retention) on arbitrary
-    segments — hypothesis shrinks the seeded randomized test's blind spots
-    (1-posting terms, all-tied weights, half-dead segments, block_size=1,
-    watermarks splitting a block)."""
+    masking, snapshot-watermark masking, tie retention, no dropped k-th
+    doc) on arbitrary segments — hypothesis shrinks the seeded randomized
+    test's blind spots (1-posting terms, all-tied weights, half-dead
+    segments, block_size=1, watermarks splitting a block)."""
     seg_docs, terms, qw, dead, block_size, k, wm = case
     g = _mk_rows(terms, block_size=block_size)
     acc, alive = _truth(seg_docs, terms, qw, dead, wm)
@@ -562,81 +579,6 @@ def test_batch_segment_exactness_property(case, n_queries):
         _check_exact(d_out, s_out, acc, alive, k)
 
 
-def test_batch_wand_nox_equals_batch_sql(corpus, spark):
-    """The exchange-free batch path (method='wand_nox': partial per-task
-    sums, no repartition(seg)) must equal the SQL batch path exactly —
-    including tombstones, which it masks row-grain on the summed frame.
-    Runs against whatever tombstones the module fixture accumulated."""
-    idx_dir, _ = corpus
-    s = Searcher(spark, idx_dir, CFG)
-    queries = [
-        {"query_id": f"q{i}", "text": q["text"]}
-        for i, q in enumerate(generate_query_set(12, seed=31))
-    ]
-
-    def collect(method, k, cos=False):
-        got = {}
-        for r in s.search_many(queries, top_k=k, method=method, use_cosine=cos).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
-    for k in (3, 10):
-        sql, nox = collect("sql", k), collect("wand_nox", k)
-        assert set(sql) == set(nox)
-        for qid in sql:
-            assert [d for d, _ in sql[qid]] == [d for d, _ in nox[qid]], qid
-            for (_, a), (_, b) in zip(sql[qid], nox[qid]):
-                assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
-    # cosine mode through the normalized stream
-    sqlc, noxc = collect("sql", 5, cos=True), collect("wand_nox", 5, cos=True)
-    assert set(sqlc) == set(noxc)
-    for qid in sqlc:
-        assert [d for d, _ in sqlc[qid]] == [d for d, _ in noxc[qid]], qid
-        for (_, a), (_, b) in zip(sqlc[qid], noxc[qid]):
-            assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
-
-
-def test_batch_wand_nox_appended_multifile_index(spark, tmp_path):
-    """wand_nox on an APPENDED index: a segment's runs live in multiple
-    files that land in DIFFERENT scan tasks — exactly the case the
-    partial-sum merge exists for (each task emits its fragment's sums, the
-    groupBy adds them)."""
-    from splade_easy_spark.index.append import append_documents
-    from splade_easy_spark.index.maintenance import delete
-
-    idx_dir = str(tmp_path / "index")
-    tx = generate_transcripts(spark, num_convs=18, seed=11)
-    build_index(spark, tx, idx_dir, CFG)
-    for seed in (12, 13):
-        append_documents(
-            spark, idx_dir, generate_transcripts(spark, num_convs=6, seed=seed), CFG
-        )
-    s0 = Searcher(spark, idx_dir, CFG)
-    victims = [r["doc_id"] for r in s0.search("baba0 ceba1", 2, method="sql").collect()]
-    assert delete(spark, idx_dir, victims) == len(victims)
-
-    s = Searcher(spark, idx_dir, CFG)
-    queries = [
-        {"query_id": f"q{i}", "text": q["text"]}
-        for i, q in enumerate(generate_query_set(10, seed=21))
-    ]
-
-    def collect(method, k):
-        got = {}
-        for r in s.search_many(queries, top_k=k, method=method).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
-    sql, nox = collect("sql", 10), collect("wand_nox", 10)
-    assert set(sql) == set(nox)
-    for qid in sql:
-        assert [d for d, _ in sql[qid]] == [d for d, _ in nox[qid]], qid
-        for (_, a), (_, b) in zip(sql[qid], nox[qid]):
-            assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
-    for qid, rows in nox.items():
-        assert not any(d in victims for d, _ in rows)
-
-
 def test_term_bounds_dominate_every_packed_weight(corpus, spark):
     """The driver-side per-term bound (idf · max_tf·(k1+1)/(max_tf+k1·(1−b)))
     must dominate every doc-side weight actually indexed — the soundness
@@ -668,19 +610,10 @@ def test_oov_drop_exact_batch_and_single(corpus, spark):
         {"query_id": f"q{i}", "text": q["text"] + " zzqx9 plorvax unseen_tok"}
         for i, q in enumerate(base)
     ]
-
-    def collect(method):
-        got = {}
-        for r in s.search_many(queries, top_k=5, method=method).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
-    sql, wand = collect("sql"), collect("wand")
-    assert set(sql) == set(wand)
-    for qid in sql:
-        assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]], qid
-        for (_, a), (_, b) in zip(sql[qid], wand[qid]):
-            assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
+    _assert_same_hits(
+        _batch_hits(s, queries, top_k=5, method="sql"),
+        _batch_hits(s, queries, top_k=5, method="wand"),
+    )
     bounds = s._term_bounds()
     assert "zzqx9" not in bounds and "plorvax" not in bounds
     # cache is now hot: the single-query path applies the same exact drop
@@ -710,20 +643,10 @@ def test_oov_drop_exact_cosine_qnorm(corpus, spark):
         {"query_id": f"c{i}", "text": q["text"] + " zzqx9 plorvax"}
         for i, q in enumerate(generate_query_set(6, seed=55))
     ]
-
-    def collect(method):
-        got = {}
-        rows = s.search_many(queries, top_k=5, use_cosine=True, method=method).collect()
-        for r in rows:
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
-    sql, wand = collect("sql"), collect("wand")
-    assert set(sql) == set(wand)
-    for qid in sql:
-        assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]], qid
-        for (_, a), (_, b) in zip(sql[qid], wand[qid]):
-            assert abs(a - b) <= 1e-5 * max(1.0, abs(a))
+    _assert_same_hits(
+        _batch_hits(s, queries, top_k=5, use_cosine=True, method="sql"),
+        _batch_hits(s, queries, top_k=5, use_cosine=True, method="wand"),
+    )
 
 
 def test_term_bounds_vocab_cap_disables_pruning(corpus, spark):
@@ -737,17 +660,10 @@ def test_term_bounds_vocab_cap_disables_pruning(corpus, spark):
         {"query_id": f"q{i}", "text": q["text"]}
         for i, q in enumerate(generate_query_set(6, seed=88))
     ]
-
-    def collect(method):
-        got = {}
-        for r in s.search_many(queries, top_k=5, method=method).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
-
-    sql, wand = collect("sql"), collect("wand")
-    assert set(sql) == set(wand)
-    for qid in sql:
-        assert [d for d, _ in sql[qid]] == [d for d, _ in wand[qid]]
+    _assert_same_hits(
+        _batch_hits(s, queries, top_k=5, method="sql"),
+        _batch_hits(s, queries, top_k=5, method="wand"),
+    )
 
 
 def test_prune_below_approximate_tail_cut(corpus, spark):
@@ -763,12 +679,8 @@ def test_prune_below_approximate_tail_cut(corpus, spark):
         {"query_id": f"lq{i}", "text": " ".join(vocab[i * 5 % 40 : i * 5 % 40 + 14])}
         for i in range(6)
     ]
-
     def collect(method, **kw):
-        got = {}
-        for r in s.search_many(queries, top_k=5, method=method, **kw).collect():
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        return got
+        return _batch_hits(s, queries, top_k=5, method=method, **kw)
 
     exact = collect("wand")
     # threshold below any realistic ratio: nothing cut, exactly equal
